@@ -11,7 +11,14 @@ reference surface — see SURVEY.md §7.1 step 7).
   learned from a labeled sample, broadcast, naive-Bayes argmax
   (curation-grade upgrade of ``text.lang_id``).
 - :mod:`.multimodal` — opaque binary payload columns with typed
-  metadata, decoded via Arrow-batched ``mapInPandas``.
+  metadata. Every per-payload decode stage in it and in
+  :mod:`.audio`, :mod:`.video`, :mod:`.pdf`, :mod:`.warc` and
+  :mod:`.webdataset` is a row function run by
+  ``_payload.map_payloads`` — one map-only Arrow stage with a
+  declared schema, where a null or undecodable payload gives one
+  all-null row keyed by its id and a fan-out gives one row per item.
+  Their ``make_*_payload`` fixture builders share
+  ``_payload.build_payloads``.
 - :mod:`.layout` — Z-order (Morton-curve) storage layout: exact
   integer bit-interleave keys + range-partitioned sorted writes for
   multi-dimensional parquet stats pruning.
@@ -40,7 +47,7 @@ reference surface — see SURVEY.md §7.1 step 7).
 - :mod:`.graph` — link-graph analytics: out-degrees and exact
   deterministic PageRank (the crawl quality prior).
 - :mod:`.audio` — framed STFT features over PCM payloads (dominant
-  spectral bin, exact frame energy/RMS) via Arrow ``mapInPandas``.
+  spectral bin, exact frame energy/RMS).
 - :mod:`.webdataset` — WebDataset-style TAR shard ingestion: member
   explode + row-local sample grouping (ext→payload map), composing
   with the real decoders for downstream decode.
@@ -55,8 +62,8 @@ reference surface — see SURVEY.md §7.1 step 7).
   CONSTANT/VERBATIM/FIXED subframes, Rice residuals, CRC-8/16,
   stereo decorrelation; plus a spec-conformant fixture encoder.
 - :mod:`.warc` — WARC (ISO 28500) crawl-archive record parsing:
-  plain/gzip/gzip-member inputs, Arrow ``mapInPandas`` record
-  fan-out, deterministic oracle fixtures.
+  plain/gzip/gzip-member inputs, record fan-out, deterministic
+  oracle fixtures.
 - :mod:`.pdf` — stdlib-only PDF text extraction: classic xref
   chains (incl. incremental updates), COS object parser, page-tree
   walk, FlateDecode, BT/ET text operators; plus a spec-conformant

@@ -1,5 +1,5 @@
 """Audio feature extraction over decoded PCM audio: framed short-time
-FFT features via Arrow ``mapInPandas``.
+FFT features in one :func:`._payload.map_payloads` stage.
 
 Extends :mod:`.multimodal` (container parsing, sample-level
 embeddings) with the first *frequency-domain* stage a real audio
@@ -33,16 +33,11 @@ Reference parity note: the reference engine has no audio operator
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
 
+from ._payload import Rows, build_payloads, map_payloads
 from .multimodal import parse_audio
 
 __all__ = ["stft_frame_features", "make_tone_payload"]
@@ -92,9 +87,7 @@ def stft_frame_features(
     Output: ``(id_col, frame_idx, dominant_bin, energy, rms)`` — see
     the module docstring for each feature's exactness contract.
     Undecodable payloads and clips shorter than one frame yield a
-    single all-null feature row (the payload stays attributable, the
-    stage never fails — the :func:`multimodal.decode_image_meta`
-    convention).
+    single all-null feature row.
     """
     if hop is None:
         hop = frame_len
@@ -102,36 +95,15 @@ def stft_frame_features(
         raise ValueError("frame_len must be >= 2 and hop >= 1")
     if channel < 0:
         raise ValueError("channel must be >= 0")
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *STFT_FIELDS]
-    )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[Any] = []
-            rows: list[tuple] = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                meta = parse_audio(p)
-                feats: list[tuple] = []
-                if meta is not None and channel < meta["n_channels"]:
-                    mono = meta["samples"][channel :: meta["n_channels"]]
-                    feats = _frame_features(mono, frame_len, hop)
-                if not feats:
-                    ids.append(i)
-                    rows.append((None, None, None, None))
-                else:
-                    for f in feats:
-                        ids.append(i)
-                        rows.append(f)
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in STFT_FIELDS]
-            )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
+    def rows(payload: bytes) -> Rows:
+        meta = parse_audio(payload)
+        if meta is None or channel >= meta["n_channels"]:
+            return None
+        mono = meta["samples"][channel :: meta["n_channels"]]
+        return _frame_features(mono, frame_len, hop) or None
 
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return map_payloads(df, rows, STFT_FIELDS, id_col, payload_col)
 
 
 def make_tone_payload(
@@ -158,29 +130,21 @@ def make_tone_payload(
     """
     import struct
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            period = 1 << (2 + i % 5)
-            amp = 500 + (i % 10) * 100
-            n = frame_len * (1 + i % 3)
-            pos = np.arange(n, dtype=np.int64)
-            samples = np.where((pos % period) < period // 2, amp, -amp)
-            data = samples.astype("<i2").tobytes()
-            fmt_chunk = struct.pack(
-                "<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16
-            )
-            body = (
-                b"WAVE"
-                + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
-            out.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        period = 1 << (2 + i % 5)
+        amp = 500 + (i % 10) * 100
+        n = frame_len * (1 + i % 3)
+        pos = np.arange(n, dtype=np.int64)
+        samples = np.where((pos % period) < period // 2, amp, -amp)
+        data = samples.astype("<i2").tobytes()
+        fmt_chunk = struct.pack(
+            "<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16
+        )
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)

@@ -36,6 +36,8 @@ null row, not a job failure.
 
 from __future__ import annotations
 
+from . import warc as _warc
+
 __all__ = [
     "parse_flac",
     "encode_flac",
@@ -139,11 +141,6 @@ _BLOCKSIZES = {
 }
 
 _SAMPLE_SIZES = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
-
-#: PCM decompression-bomb cap (r11): the STREAMINFO-claimed total
-#: bounds decode output regardless of input size — 64 MiB, the same
-#: policy figure as warc.MAX_DECODED_BYTES / webp.MAX_RASTER_BYTES
-MAX_PCM_BYTES = 64 * 1024 * 1024
 
 
 def _decode_residuals(br: _BitReader, blocksize: int, order: int) -> list[int]:
@@ -297,8 +294,8 @@ def parse_flac(payload: bytes) -> dict | None:
         # whole block of samples from a ~14-byte frame, and the frame
         # loop runs until the STREAMINFO-claimed total (36 bits — up
         # to 68G samples) is reached, so output is header-bound, not
-        # input-bound. Same 64 MiB policy cap as the other decoders.
-        if total * max(n_channels, 1) * 8 > MAX_PCM_BYTES:
+        # input-bound. Same policy cap as the other decoders.
+        if total * max(n_channels, 1) * 8 > _warc.MAX_DECODED_BYTES:
             return None
 
         chans: list[list[int]] = [[] for _ in range(n_channels)]

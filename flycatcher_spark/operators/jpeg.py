@@ -48,14 +48,12 @@ from __future__ import annotations
 
 import numpy as np
 
+from . import warc as _warc
+
 __all__ = ["parse_jpeg", "encode_jpeg", "encode_jpeg_progressive", "ZIGZAG"]
 
 #: zigzag scan order: ZIGZAG[i] = (row, col) of the i-th coefficient
 ZIGZAG = []
-#: coefficient-grid decompression-bomb cap (r11): SOF dims bound the
-#: decoder's allocation, not the input size — 64 MiB, the same policy
-#: figure as warc.MAX_DECODED_BYTES / webp.MAX_RASTER_BYTES
-MAX_COEF_BYTES = 64 * 1024 * 1024
 
 _r = _c = 0
 for _i in range(64):
@@ -291,9 +289,9 @@ def parse_jpeg(payload: bytes) -> dict | None:
                 # coefficient-grid allocation (~8 bytes per pixel per
                 # component) regardless of how little entropy data
                 # follows, so a ~300-byte payload claiming
-                # 30000x30000 would allocate gigabytes. Same 64 MiB
-                # policy cap as the WARC/VP8L bomb guards.
-                if h * w * max(ncomp, 1) * 8 > MAX_COEF_BYTES:
+                # 30000x30000 would allocate gigabytes. Same policy
+                # cap as the WARC/VP8L bomb guards.
+                if h * w * max(ncomp, 1) * 8 > _warc.MAX_DECODED_BYTES:
                     return None
                 frame = (h, w, comps)
                 coefs = _alloc_coefs(h, w, comps)

@@ -1,21 +1,26 @@
 """Multimodal column plumbing: image/audio/video as opaque binary.
 
-Treats media as ``binary`` payload columns with typed metadata,
-processed by Arrow-batched ``mapInPandas`` — the Spark-side pattern a
-100 TB multimodal pipeline needs:
+Treats media as ``binary`` payload columns with typed metadata. Every
+per-payload stage here is a row function plus one
+:func:`._payload.map_payloads` call, which runs it inside one map-only
+Arrow ``mapInPandas`` stage with the output schema declared up front:
 
 - the payload never materializes on the driver;
 - decode runs per Arrow batch inside Python workers (vectorized
   transfer, no per-row pickling);
-- output schema is declared up front so Catalyst can plan downstream
-  operators without running the Python stage.
+- Catalyst plans downstream operators without running the Python
+  stage;
+- the null-row rule: a null or undecodable payload yields ONE
+  all-null row keyed by its id (the stage never fails and the payload
+  stays attributable); a fan-out stage (frames, members, samples)
+  yields one row per item and repeats the id on each.
 
-The actual media decode (PIL/ffmpeg/soundfile) is NOT available in
-this container, so :func:`decode_meta` runs a clearly-marked
-**deterministic fake decode** (byte-length-derived metadata) behind
-the same plumbing; swap ``_fake_decode_batch`` for a real decoder by
-passing ``decode_fn``. A real decoder raising per-payload errors
-should emit nulls, keeping the pipeline total.
+The ``make_*_payload`` fixture builders are id → bytes functions
+behind :func:`._payload.build_payloads`.
+
+:func:`decode_meta` is the exception: its public ``decode_fn`` hook
+sees whole batches, and its default is a clearly-marked
+**deterministic fake decode** (byte-length-derived metadata).
 """
 
 from __future__ import annotations
@@ -29,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+
+from ._payload import Rows, build_payloads, map_payloads
 
 #: Metadata schema produced by the decode stage, appended to the
 #: pass-through key column.
@@ -129,38 +136,21 @@ def embed_payload(
     Map-only: at 100 TB this runs at scan speed beside the decode
     stage, and the output feeds ``operators.similarity`` unchanged.
     """
-    import numpy as np
-    import pandas as pd
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def default_embed(payload: Any, d: int) -> list | None:
-        if payload is None:
-            return None
+    def default_embed(payload: Any, d: int) -> list:
         b = np.frombuffer(bytes(payload), dtype=np.uint8)
         v = np.zeros(d, dtype=np.int64)
         np.add.at(v, np.arange(len(b)) % d, b)
         return [float(x) for x in v]
 
     embed = embed_fn or default_embed
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "embedding": [
-                        embed(p, dim) for p in pdf[payload_col]
-                    ],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(process, schema=out_schema)
+    return map_payloads(
+        df,
+        lambda p: [(embed(p, dim),)],
+        [T.StructField("embedding", T.ArrayType(T.DoubleType()))],
+        id_col,
+        payload_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -170,9 +160,7 @@ def embed_payload(
 # none — their headers and payloads are parseable with stdlib + numpy.
 # They make the decode stage REAL (true width/height/duration/channel
 # stats, true pixel/sample-derived embeddings) while the byte-stub
-# above stays as the oracle-portable fake. At 100 TB both run as the
-# same Arrow mapInPandas map-only stage: payloads never leave the
-# executors, output schema is declared up front.
+# above stays as the oracle-portable fake.
 # ---------------------------------------------------------------------------
 
 #: image metadata emitted by :func:`decode_image_meta`
@@ -727,6 +715,49 @@ def parse_wav(payload: bytes) -> dict | None:
     }
 
 
+def _px_mean(px: np.ndarray) -> float | None:
+    # full precision (exact: integer sums stay below 2^53); consumers
+    # round engine-side
+    return float(px.mean()) if px.size else None
+
+
+def _image_rows(payload: bytes) -> Rows:
+    meta = parse_image(payload)
+    if meta is None:
+        return None
+    px = meta["pixels"]
+    return [
+        (
+            meta["fmt"],
+            meta["width"],
+            meta["height"],
+            meta["maxval"],
+            meta["n_channels"],
+            int(px.size),
+            _px_mean(px),
+        )
+    ]
+
+
+def _audio_rows(meta: dict | None, with_fmt: bool) -> Rows:
+    """The :data:`WAV_META_FIELDS` row of a parsed clip, led by its
+    container ``fmt`` when ``with_fmt``."""
+    if meta is None:
+        return None
+    s = meta["samples"]
+    row = (
+        meta["sample_rate"],
+        meta["n_channels"],
+        meta["bits_per_sample"],
+        meta["n_frames"],
+        meta["n_frames"] / meta["sample_rate"],
+        # exact integer sum of squares / n, then one sqrt —
+        # reproducible bit-for-bit in SQL
+        float(np.sqrt(np.mean(np.square(s)))) if s.size else None,
+    )
+    return [(meta["fmt"], *row) if with_fmt else row]
+
+
 def decode_image_meta(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -735,56 +766,15 @@ def decode_image_meta(
 ) -> DataFrame:
     """REAL image decode over a binary column: parse PPM/PGM, PNG, or
     baseline JPEG (magic-byte dispatch, :func:`parse_image`) headers
-    and raster, emit true dimensions + pixel statistics. Same Arrow
-    ``mapInPandas`` plumbing as :func:`decode_meta` (map-only,
-    payloads stay on executors); malformed payloads yield null
-    metadata rather than failing the stage.
+    and raster, emit true dimensions + pixel statistics, one row per
+    payload (null metadata for a malformed one).
 
     ``passthrough`` columns ride through the Arrow stage unchanged —
     a composed query (e.g. WebDataset sample decode) then needs NO
     join back to its source, so an expensive upstream (shard build +
     tar walk) evaluates exactly once."""
-    import pandas as pd
-
-    passthrough = [c for c in (passthrough or []) if c != id_col]
-    pass_fields = [df.schema[c] for c in passthrough]
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *pass_fields, *IMAGE_META_FIELDS]
-    )
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for p in pdf[payload_col]:
-                meta = parse_image(p)
-                if meta is None:
-                    rows.append((None,) * 7)
-                else:
-                    px = meta["pixels"]
-                    rows.append(
-                        (
-                            meta["fmt"],
-                            meta["width"],
-                            meta["height"],
-                            meta["maxval"],
-                            meta["n_channels"],
-                            int(px.size),
-                            # full precision (exact: integer sums stay
-                            # below 2^53); consumers round engine-side
-                            float(px.mean()) if px.size else None,
-                        )
-                    )
-            out = pd.DataFrame(
-                rows,
-                columns=[f.name for f in IMAGE_META_FIELDS],
-            )
-            for i, c in enumerate(passthrough):
-                out.insert(i, c, pdf[c].values)
-            out.insert(0, id_col, pdf[id_col].values)
-            yield out
-
-    return df.select(id_col, *passthrough, payload_col).mapInPandas(
-        process, schema=out_schema
+    return map_payloads(
+        df, _image_rows, IMAGE_META_FIELDS, id_col, payload_col, passthrough or ()
     )
 
 
@@ -793,43 +783,13 @@ def decode_wav_meta(
 ) -> DataFrame:
     """REAL audio decode over a binary column: parse the RIFF/WAVE
     container, emit true rate/channels/duration and sample RMS."""
-    import numpy as np
-    import pandas as pd
-
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *WAV_META_FIELDS]
+    return map_payloads(
+        df,
+        lambda p: _audio_rows(parse_wav(p), with_fmt=False),
+        WAV_META_FIELDS,
+        id_col,
+        payload_col,
     )
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for p in pdf[payload_col]:
-                meta = parse_wav(p)
-                if meta is None:
-                    rows.append((None,) * 6)
-                else:
-                    s = meta["samples"]
-                    rows.append(
-                        (
-                            meta["sample_rate"],
-                            meta["n_channels"],
-                            meta["bits_per_sample"],
-                            meta["n_frames"],
-                            meta["n_frames"] / meta["sample_rate"],
-                            # exact integer sum of squares / n, then one
-                            # sqrt — reproducible bit-for-bit in SQL
-                            float(np.sqrt(np.mean(np.square(s))))
-                            if s.size
-                            else None,
-                        )
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in WAV_META_FIELDS]
-            )
-            out.insert(0, id_col, pdf[id_col].values)
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(process, schema=out_schema)
 
 
 def image_pixel_embedding(payload: bytes, dim: int) -> list | None:
@@ -890,22 +850,14 @@ def make_pnm_payload(
     """
     magic, n_ch = (b"P6", 3) if fmt == "ppm" else (b"P5", 1)
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            header = magic + b"\n# synthetic\n%d %d\n255\n" % (w, h)
-            n = w * h * n_ch
-            px = (i * 7 + np.arange(n, dtype=np.int64) * 13) % 256
-            out.append(header + px.astype(np.uint8).tobytes())
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        header = magic + b"\n# synthetic\n%d %d\n255\n" % (w, h)
+        n = w * h * n_ch
+        px = (i * 7 + np.arange(n, dtype=np.int64) * 13) % 256
+        return header + px.astype(np.uint8).tobytes()
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)
 
 
 def make_png_payload(
@@ -951,55 +903,47 @@ def make_png_payload(
             + struct.pack(">I", zlib.crc32(tag + body))
         )
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            n = w * h * n_ch
-            px = (
-                ((i * 7 + np.arange(n, dtype=np.int64) * 13) % 256)
-                .astype(np.uint8)
-                .reshape(h, w * n_ch)
-            )
-            raw = bytearray()
-            if i % 4 == 3:
-                # Adam7 interlaced arm (r8): the SAME raster stored as
-                # 7 reduced images (filter 0) — decoded statistics,
-                # and therefore the oracle, are unchanged
-                interlace = 1
-                cube = px.reshape(h, w, n_ch)
-                for rs, cs, ri, ci in _ADAM7:
-                    sub = cube[rs::ri, cs::ci]
-                    if sub.shape[0] == 0 or sub.shape[1] == 0:
-                        continue
-                    for row in sub:
-                        raw += b"\x00" + row.astype(np.uint8).tobytes()
-            else:
-                interlace = 0
-                prev = np.zeros(w * n_ch, dtype=np.uint8)
-                for y in range(h):
-                    if y % 2 == 0:
-                        raw += b"\x00" + px[y].tobytes()
-                    else:  # Up filter: store line - prev (mod 256)
-                        raw += b"\x02" + ((px[y] - prev) & 0xFF).astype(
-                            np.uint8
-                        ).tobytes()
-                    prev = px[y]
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, interlace)
-            out.append(
-                _PNG_SIG
-                + _chunk(b"IHDR", ihdr)
-                + _chunk(b"IDAT", zlib.compress(bytes(raw)))
-                + _chunk(b"IEND", b"")
-            )
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        n = w * h * n_ch
+        px = (
+            ((i * 7 + np.arange(n, dtype=np.int64) * 13) % 256)
+            .astype(np.uint8)
+            .reshape(h, w * n_ch)
+        )
+        raw = bytearray()
+        if i % 4 == 3:
+            # Adam7 interlaced arm (r8): the SAME raster stored as
+            # 7 reduced images (filter 0) — decoded statistics,
+            # and therefore the oracle, are unchanged
+            interlace = 1
+            cube = px.reshape(h, w, n_ch)
+            for rs, cs, ri, ci in _ADAM7:
+                sub = cube[rs::ri, cs::ci]
+                if sub.shape[0] == 0 or sub.shape[1] == 0:
+                    continue
+                for row in sub:
+                    raw += b"\x00" + row.astype(np.uint8).tobytes()
+        else:
+            interlace = 0
+            prev = np.zeros(w * n_ch, dtype=np.uint8)
+            for y in range(h):
+                if y % 2 == 0:
+                    raw += b"\x00" + px[y].tobytes()
+                else:  # Up filter: store line - prev (mod 256)
+                    raw += b"\x02" + ((px[y] - prev) & 0xFF).astype(
+                        np.uint8
+                    ).tobytes()
+                prev = px[y]
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, interlace)
+        return (
+            _PNG_SIG
+            + _chunk(b"IHDR", ihdr)
+            + _chunk(b"IDAT", zlib.compress(bytes(raw)))
+            + _chunk(b"IEND", b"")
+        )
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)
 
 
 def make_gif_payload(
@@ -1022,26 +966,16 @@ def make_gif_payload(
     pal = [((j * 37) % 256, (j * 59) % 256, (j * 83) % 256)
            for j in range(8)]
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            idx = [(i * 5 + k * 11) % 8 for k in range(w * h)]
-            out.append(
-                encode_gif(
-                    w, h, idx, pal,
-                    interlaced=(i % 4 == 3),
-                    animated_copies=2 if i % 5 == 0 else 1,
-                )
-            )
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        idx = [(i * 5 + k * 11) % 8 for k in range(w * h)]
+        return encode_gif(
+            w, h, idx, pal,
+            interlaced=(i % 4 == 3),
+            animated_copies=2 if i % 5 == 0 else 1,
+        )
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)
 
 
 GIF_FRAME_FIELDS = [
@@ -1068,49 +1002,28 @@ def gif_frames(
     genuinely applied. Frames past the last sampled index are never
     LZW-decoded, and unsampled restore-previous frames skip decode
     entirely (their pixels are erased before any sampled frame sees
-    them). Same Arrow ``mapInPandas`` contract as
-    :func:`video.video_frames`: map-only, payloads stay on
-    executors, undecodable payloads yield one all-null row."""
+    them)."""
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
     from .gif import parse_gif_frames
 
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *GIF_FRAME_FIELDS]
-    )
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids = []
-            rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                meta = parse_gif_frames(p, every_n=every_n)
-                if meta is None:
-                    ids.append(i)
-                    rows.append((None,) * 6)
-                    continue
-                for fr in meta["frames"]:
-                    px = fr["pixels"]
-                    ids.append(i)
-                    rows.append(
-                        (
-                            fr["frame_idx"],
-                            meta["n_frames"],
-                            fr["delay_cs"],
-                            meta["screen_width"],
-                            meta["screen_height"],
-                            float(px.mean()) if px.size else None,
-                        )
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in GIF_FRAME_FIELDS]
+    def rows(payload: bytes) -> Rows:
+        meta = parse_gif_frames(payload, every_n=every_n)
+        if meta is None:
+            return None
+        return [
+            (
+                fr["frame_idx"],
+                meta["n_frames"],
+                fr["delay_cs"],
+                meta["screen_width"],
+                meta["screen_height"],
+                _px_mean(fr["pixels"]),
             )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
+            for fr in meta["frames"]
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return map_payloads(df, rows, GIF_FRAME_FIELDS, id_col, payload_col)
 
 
 MEDIA_FRAME_FIELDS = [
@@ -1130,9 +1043,9 @@ def media_frames(
     every_n: int = 1,
 ) -> DataFrame:
     """Unified sampled-frame decode over a MIXED video/animation
-    corpus (r9): one Arrow ``mapInPandas`` stage dispatches each
-    payload by magic — MJPEG-AVI through :func:`video.video_frames`'
-    kernel (only sampled frames JPEG-decode), animated GIF through
+    corpus (r9): one stage dispatches each payload by magic —
+    MJPEG-AVI through :func:`video.video_frames`' kernel (only
+    sampled frames JPEG-decode), animated GIF through
     :func:`gif.parse_gif_frames` (composed canvases; unsampled
     restore-previous frames and frames past the window never
     LZW-decode), and — r10 — animated lossless WebP through
@@ -1141,101 +1054,42 @@ def media_frames(
     entropy-decode; stills ride as one-frame animations; WebP means
     are over the RGBA canvas) — and emits one row per sampled frame
     with the format tag. A corpus mixing the formats row-by-row
-    needs no pre-split, no union, no second scan. Undecodable
-    payloads yield one all-null row."""
+    needs no pre-split, no union, no second scan."""
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
     from .gif import parse_gif_frames
-    from .jpeg import parse_jpeg
-    from .video import parse_avi_frames
+    from .video import _avi_rows
     from .webp import parse_webp_frames
 
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *MEDIA_FRAME_FIELDS]
-    )
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, rows = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                head = b"" if p is None else bytes(p[:12])
-                if head[:4] == b"RIFF" and head[8:12] == b"WEBP":
-                    meta = parse_webp_frames(p, every_n=every_n)
-                    if meta is None:
-                        ids.append(i)
-                        rows.append((None,) * 6)
-                        continue
-                    for fr in meta["frames"]:
-                        px = fr["pixels"]
-                        ids.append(i)
-                        rows.append(
-                            (
-                                "webp",
-                                fr["frame_idx"],
-                                meta["n_frames"],
-                                meta["canvas_width"],
-                                meta["canvas_height"],
-                                float(px.mean()) if px.size else None,
-                            )
-                        )
-                    continue
-                if head[:4] == b"RIFF" and head[8:12] == b"AVI ":
-                    frames = parse_avi_frames(p)
-                    if frames is None:
-                        ids.append(i)
-                        rows.append((None,) * 6)
-                        continue
-                    for fi in range(0, len(frames), every_n):
-                        img = parse_jpeg(frames[fi])
-                        ids.append(i)
-                        if img is None:
-                            rows.append(
-                                ("avi", fi, len(frames), None, None, None)
-                            )
-                        else:
-                            px = img["pixels"]
-                            rows.append(
-                                (
-                                    "avi",
-                                    fi,
-                                    len(frames),
-                                    img["width"],
-                                    img["height"],
-                                    float(px.mean()) if px.size else None,
-                                )
-                            )
-                    continue
-                meta = (
-                    parse_gif_frames(p, every_n=every_n)
-                    if head[:4] == b"GIF8"
-                    else None
-                )
-                if meta is None:
-                    ids.append(i)
-                    rows.append((None,) * 6)
-                    continue
-                for fr in meta["frames"]:
-                    px = fr["pixels"]
-                    ids.append(i)
-                    rows.append(
-                        (
-                            "gif",
-                            fr["frame_idx"],
-                            meta["n_frames"],
-                            meta["screen_width"],
-                            meta["screen_height"],
-                            float(px.mean()) if px.size else None,
-                        )
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in MEDIA_FRAME_FIELDS]
+    def canvas_rows(fmt: str, meta: dict | None, size: str) -> Rows:
+        if meta is None:
+            return None
+        return [
+            (
+                fmt,
+                fr["frame_idx"],
+                meta["n_frames"],
+                meta[f"{size}_width"],
+                meta[f"{size}_height"],
+                _px_mean(fr["pixels"]),
             )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
+            for fr in meta["frames"]
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    def rows(payload: bytes) -> Rows:
+        head = bytes(payload[:12])
+        if head[:4] == b"RIFF" and head[8:12] == b"WEBP":
+            meta = parse_webp_frames(payload, every_n=every_n)
+            return canvas_rows("webp", meta, "canvas")
+        if head[:4] == b"RIFF" and head[8:12] == b"AVI ":
+            avi = _avi_rows(payload, every_n)
+            return None if avi is None else [("avi", *r) for r in avi]
+        if head[:4] == b"GIF8":
+            meta = parse_gif_frames(payload, every_n=every_n)
+            return canvas_rows("gif", meta, "screen")
+        return None
+
+    return map_payloads(df, rows, MEDIA_FRAME_FIELDS, id_col, payload_col)
 
 
 def make_animated_gif_payload(
@@ -1271,44 +1125,36 @@ def make_animated_gif_payload(
     pal = [((j * 37) % 256, (j * 59) % 256, (j * 83) % 256)
            for j in range(8)]
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            c = 1 + i % 7
-            frames = [
-                dict(
-                    width=w, height=h,
-                    indices=[(i * 5 + k * 11) % 8 for k in range(w * h)],
-                    disposal=1, delay_cs=10 + i % 5,
-                ),
-                dict(
-                    left=1, top=1, width=w - 2, height=h - 2,
-                    indices=[7] * ((w - 2) * (h - 2)),
-                    disposal=3, delay_cs=20,
-                ),
-                dict(
-                    width=2, height=2,
-                    indices=[
-                        c if (2 * r + col) % 2 == 0 else 0
-                        for r in range(2) for col in range(2)
-                    ],
-                    transparent_index=0, disposal=2, delay_cs=30,
-                ),
-                dict(
-                    width=w, height=h, indices=[0] * (w * h),
-                    delay_cs=40,
-                ),
-            ]
-            out.append(encode_gif_animation(w, h, frames, pal))
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        c = 1 + i % 7
+        frames = [
+            dict(
+                width=w, height=h,
+                indices=[(i * 5 + k * 11) % 8 for k in range(w * h)],
+                disposal=1, delay_cs=10 + i % 5,
+            ),
+            dict(
+                left=1, top=1, width=w - 2, height=h - 2,
+                indices=[7] * ((w - 2) * (h - 2)),
+                disposal=3, delay_cs=20,
+            ),
+            dict(
+                width=2, height=2,
+                indices=[
+                    c if (2 * r + col) % 2 == 0 else 0
+                    for r in range(2) for col in range(2)
+                ],
+                transparent_index=0, disposal=2, delay_cs=30,
+            ),
+            dict(
+                width=w, height=h, indices=[0] * (w * h),
+                delay_cs=40,
+            ),
+        ]
+        return encode_gif_animation(w, h, frames, pal)
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)
 
 
 def make_wav_payload(
@@ -1323,34 +1169,26 @@ def make_wav_payload(
     ``((id*31 + i*17) % 4096) - 2048``."""
     import struct
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            n_channels = 1 + i % 2
-            n_frames = 50 + i % 100
-            n_samples = n_frames * n_channels
-            samples = (
-                (i * 31 + np.arange(n_samples, dtype=np.int64) * 17) % 4096
-            ) - 2048
-            data = samples.astype("<i2").tobytes()
-            byte_rate = sample_rate * n_channels * 2
-            fmt_chunk = struct.pack(
-                "<HHIIHH", 1, n_channels, sample_rate, byte_rate, n_channels * 2, 16
-            )
-            body = (
-                b"WAVE"
-                + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
-            out.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        n_channels = 1 + i % 2
+        n_frames = 50 + i % 100
+        n_samples = n_frames * n_channels
+        samples = (
+            (i * 31 + np.arange(n_samples, dtype=np.int64) * 17) % 4096
+        ) - 2048
+        data = samples.astype("<i2").tobytes()
+        byte_rate = sample_rate * n_channels * 2
+        fmt_chunk = struct.pack(
+            "<HHIIHH", 1, n_channels, sample_rate, byte_rate, n_channels * 2, 16
+        )
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)
 
 
 def frame_sample_plan(
@@ -1417,39 +1255,13 @@ def decode_audio_meta(
     the RMS of a FLAC clip equals the RMS of the PCM it encodes,
     which is what lets the ``flac_decode`` oracle replay the sample
     formula in closed form."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *AUDIO_META_FIELDS]
+    return map_payloads(
+        df,
+        lambda p: _audio_rows(parse_audio(p), with_fmt=True),
+        AUDIO_META_FIELDS,
+        id_col,
+        payload_col,
     )
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for p in pdf[payload_col]:
-                meta = parse_audio(p)
-                if meta is None:
-                    rows.append((None,) * 7)
-                else:
-                    s = meta["samples"]
-                    rows.append(
-                        (
-                            meta["fmt"],
-                            meta["sample_rate"],
-                            meta["n_channels"],
-                            meta["bits_per_sample"],
-                            meta["n_frames"],
-                            meta["n_frames"] / meta["sample_rate"],
-                            float(np.sqrt(np.mean(np.square(s))))
-                            if s.size
-                            else None,
-                        )
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_META_FIELDS]
-            )
-            out.insert(0, id_col, pdf[id_col].values)
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(process, schema=out_schema)
 
 
 def make_flac_payload(
@@ -1470,32 +1282,23 @@ def make_flac_payload(
     exclusively."""
     from .flac import encode_flac
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        modes = ["verbatim", "fixed1", "fixed2", "fixed3", "lpc2", "lpc4"]
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            n_channels = 1 + i % 2
-            n_frames = 50 + i % 100
-            n_samples = n_frames * n_channels
-            samples = (
-                (i * 31 + np.arange(n_samples, dtype=np.int64) * 17) % 4096
-            ) - 2048
-            out.append(
-                encode_flac(
-                    samples,
-                    sample_rate=sample_rate,
-                    n_channels=n_channels,
-                    subframe=modes[i % len(modes)],
-                )
-            )
-        return pd.Series(out)
+    modes = ["verbatim", "fixed1", "fixed2", "fixed3", "lpc2", "lpc4"]
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    def build(i: int) -> bytes:
+        n_channels = 1 + i % 2
+        n_frames = 50 + i % 100
+        n_samples = n_frames * n_channels
+        samples = (
+            (i * 31 + np.arange(n_samples, dtype=np.int64) * 17) % 4096
+        ) - 2048
+        return encode_flac(
+            samples,
+            sample_rate=sample_rate,
+            n_channels=n_channels,
+            subframe=modes[i % len(modes)],
+        )
+
+    return build_payloads(df, build, id_col, payload_col)
 
 
 def make_jpeg_payload(
@@ -1517,36 +1320,19 @@ def make_jpeg_payload(
     while the decode genuinely runs the Annex G scan accumulation."""
     from .jpeg import encode_jpeg, encode_jpeg_progressive
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            bx, by = 1 + i % 3, 1 + i % 2
-            blocks = []
-            for b in range(bx * by):
-                dc = ((i * 7 + b * 13) % 160) - 80
-                blocks.append([dc] + [0] * 63)
-            if i % 3 == 2:
-                out.append(
-                    encode_jpeg_progressive(
-                        8 * bx, 8 * by, [blocks],
-                        restart_interval=2 if i % 5 == 0 else 0,
-                    )
-                )
-            else:
-                out.append(
-                    encode_jpeg(
-                        8 * bx, 8 * by, [blocks],
-                        restart_interval=2 if i % 5 == 0 else 0,
-                    )
-                )
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        bx, by = 1 + i % 3, 1 + i % 2
+        blocks = []
+        for b in range(bx * by):
+            dc = ((i * 7 + b * 13) % 160) - 80
+            blocks.append([dc] + [0] * 63)
+        encode = encode_jpeg_progressive if i % 3 == 2 else encode_jpeg
+        return encode(
+            8 * bx, 8 * by, [blocks],
+            restart_interval=2 if i % 5 == 0 else 0,
+        )
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)
 
 
 def make_tiff_payload(
@@ -1569,39 +1355,30 @@ def make_tiff_payload(
     pal = [((j * 37) % 256, (j * 59) % 256, (j * 83) % 256)
            for j in range(8)]
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        comps = ["none", "packbits", "lzw"]
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            arm = i % 3
-            if arm == 0:
-                phot, px = "gray", [(i * 13 + k * 7) % 256
-                                    for k in range(w * h)]
-            elif arm == 1:
-                phot, px = "rgb", [(i * 7 + k * 13) % 256
-                                   for k in range(w * h * 3)]
-            else:
-                phot, px = "palette", [(i * 5 + k * 11) % 8
-                                       for k in range(w * h)]
-            out.append(
-                encode_tiff(
-                    w, h, px, phot,
-                    palette=pal if phot == "palette" else None,
-                    compression=comps[(i // 3) % 3],
-                    predictor=(i % 2 == 0),
-                    rows_per_strip=2 if i % 4 == 0 else None,
-                    byte_order=">" if i % 5 == 0 else "<",
-                )
-            )
-        return pd.Series(out)
+    comps = ["none", "packbits", "lzw"]
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    def build(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        arm = i % 3
+        if arm == 0:
+            phot, px = "gray", [(i * 13 + k * 7) % 256
+                                for k in range(w * h)]
+        elif arm == 1:
+            phot, px = "rgb", [(i * 7 + k * 13) % 256
+                               for k in range(w * h * 3)]
+        else:
+            phot, px = "palette", [(i * 5 + k * 11) % 8
+                                   for k in range(w * h)]
+        return encode_tiff(
+            w, h, px, phot,
+            palette=pal if phot == "palette" else None,
+            compression=comps[(i // 3) % 3],
+            predictor=(i % 2 == 0),
+            rows_per_strip=2 if i % 4 == 0 else None,
+            byte_order=">" if i % 5 == 0 else "<",
+        )
+
+    return build_payloads(df, build, id_col, payload_col)
 
 
 def make_bmp_payload(
@@ -1621,44 +1398,30 @@ def make_bmp_payload(
     pal = [((j * 37) % 256, (j * 59) % 256, (j * 83) % 256)
            for j in range(8)]
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            arm = i % 3
-            td = i % 7 == 0
-            if arm == 0:
-                out.append(
-                    encode_bmp(
-                        w, h,
-                        [(i * 7 + k * 13) % 256 for k in range(w * h * 3)],
-                        top_down=td,
-                    )
-                )
-            elif arm == 1:
-                out.append(
-                    encode_bmp(
-                        w, h,
-                        [(i * 5 + k * 11) % 8 for k in range(w * h)],
-                        bpp=8, palette=pal, top_down=td,
-                    )
-                )
-            else:
-                out.append(
-                    encode_bmp(
-                        w, h,
-                        [(k // 4 + i) % 8 for k in range(w * h)],
-                        bpp=8, palette=pal, rle=True,
-                    )
-                )
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        arm = i % 3
+        td = i % 7 == 0
+        if arm == 0:
+            return encode_bmp(
+                w, h,
+                [(i * 7 + k * 13) % 256 for k in range(w * h * 3)],
+                top_down=td,
+            )
+        elif arm == 1:
+            return encode_bmp(
+                w, h,
+                [(i * 5 + k * 11) % 8 for k in range(w * h)],
+                bpp=8, palette=pal, top_down=td,
+            )
+        else:
+            return encode_bmp(
+                w, h,
+                [(k // 4 + i) % 8 for k in range(w * h)],
+                bpp=8, palette=pal, rle=True,
+            )
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)
 
 
 def make_webp_payload(
@@ -1679,29 +1442,21 @@ def make_webp_payload(
     dimensions and raster mean."""
     from .webp import encode_webp
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            ch = 3 + (i % 2)
-            n = w * h * ch
-            arm = i % 3
-            k = np.arange(n, dtype=np.int64)
-            if arm == 0:
-                px = (i * 7 + k * 13) % 256
-            elif arm == 1:
-                px = 200 * ((i + k) % 2)
-            else:
-                px = np.full(n, i % 256, dtype=np.int64)
-            out.append(encode_webp(px, w, h, ch))
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        ch = 3 + (i % 2)
+        n = w * h * ch
+        arm = i % 3
+        k = np.arange(n, dtype=np.int64)
+        if arm == 0:
+            px = (i * 7 + k * 13) % 256
+        elif arm == 1:
+            px = 200 * ((i + k) % 2)
+        else:
+            px = np.full(n, i % 256, dtype=np.int64)
+        return encode_webp(px, w, h, ch)
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)
 
 
 def make_webp_anim_payload(
@@ -1721,36 +1476,28 @@ def make_webp_anim_payload(
     state is a closed form DuckDB can state outright."""
     from .webp import encode_webp_animation
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            frames = [
+    def build(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        frames = [
+            dict(
+                x=0, y=0, width=w, height=h, channels=3,
+                pixels=((i * 7 + np.arange(w * h * 3) * 13) % 256),
+                duration_ms=40,
+            ),
+            dict(
+                x=2, y=2, width=w - 2, height=1, channels=3,
+                pixels=((i * 5 + np.arange((w - 2) * 3) * 11) % 256),
+                duration_ms=50,
+            ),
+        ]
+        if i % 2 == 1:
+            frames.append(
                 dict(
-                    x=0, y=0, width=w, height=h, channels=3,
-                    pixels=((i * 7 + np.arange(w * h * 3) * 13) % 256),
-                    duration_ms=40,
-                ),
-                dict(
-                    x=2, y=2, width=w - 2, height=1, channels=3,
-                    pixels=((i * 5 + np.arange((w - 2) * 3) * 11) % 256),
-                    duration_ms=50,
-                ),
-            ]
-            if i % 2 == 1:
-                frames.append(
-                    dict(
-                        x=0, y=0, width=w, height=1, channels=3,
-                        pixels=((i * 3 + np.arange(w * 3) * 17) % 256),
-                        duration_ms=60,
-                    )
+                    x=0, y=0, width=w, height=1, channels=3,
+                    pixels=((i * 3 + np.arange(w * 3) * 17) % 256),
+                    duration_ms=60,
                 )
-            out.append(encode_webp_animation(w, h, frames))
-        return pd.Series(out)
+            )
+        return encode_webp_animation(w, h, frames)
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)

@@ -31,22 +31,20 @@ Scope (documented subset, honest about what it is):
   are mapped through Latin-1 (font /Encoding and CMap handling are
   out of scope and documented so).
 
-Runs inside the same Arrow ``mapInPandas`` stage as the other
-decoders (:func:`extract_pdf_text`): payloads never shuffle and never
-land on the driver; malformed payloads yield null rows.
+:func:`extract_pdf_text` runs it as a :func:`._payload.map_payloads`
+stage like the other decoders: payloads never shuffle and never land
+on the driver; malformed payloads yield null rows.
 """
 
 from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+
+from ._payload import Rows, build_payloads, map_payloads
 
 __all__ = ["parse_pdf", "encode_pdf", "extract_pdf_text", "make_pdf_payload"]
 
@@ -990,40 +988,25 @@ PDF_META_FIELDS = [
 ]
 
 
+def _pdf_rows(payload: bytes) -> Rows:
+    meta = parse_pdf(payload)
+    if meta is None:
+        return None
+    return [(meta["n_pages"], meta["n_chars"], meta["text"])]
+
+
 def extract_pdf_text(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
 ) -> DataFrame:
     """REAL PDF text extraction over a binary column: xref walk, page
-    tree, FlateDecode, BT/ET text operators (:func:`parse_pdf`) inside
-    an Arrow ``mapInPandas`` stage — map-only, payloads stay on
-    executors, corrupt/encrypted/out-of-subset payloads yield null
-    metadata rather than failing the stage. At 100 TB this is the
+    tree, FlateDecode, BT/ET text operators (:func:`parse_pdf`);
+    corrupt/encrypted/out-of-subset payloads yield null metadata
+    rather than failing the stage. At 100 TB this is the
     same embarrassingly-parallel shape as the image/audio decoders:
     per-payload CPU with zero shuffles."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *PDF_META_FIELDS]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = []
-            for p in pdf_batch[payload_col]:
-                meta = parse_pdf(p)
-                if meta is None:
-                    rows.append((None, None, None))
-                else:
-                    rows.append(
-                        (meta["n_pages"], meta["n_chars"], meta["text"])
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in PDF_META_FIELDS]
-            )
-            out.insert(0, id_col, pdf_batch[id_col].values)
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(process, schema=out_schema)
+    return map_payloads(df, _pdf_rows, PDF_META_FIELDS, id_col, payload_col)
 
 
 def make_pdf_payload(
@@ -1047,33 +1030,23 @@ def make_pdf_payload(
     DuckDB states it outright while :func:`parse_pdf` genuinely
     inflates and walks whichever flavor it gets."""
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            pages = [
-                [f"Doc {i} page {p}", f"body {(i * 7 + p) % 97} (pdf)"]
-                for p in range(1 + i % 3)
-            ]
-            out.append(
-                encode_pdf(
-                    pages,
-                    compress=(i % 2 == 0),
-                    variant=i,
-                    nest_kids=(i % 7 == 0),
-                    split_contents=(i % 5 == 0),
-                    incremental_title=(f"rev{i}" if i % 3 == 0 else None),
-                    xref_stream=(i % 2 == 1),
-                    objstm=(i % 8 in (1, 3)),
-                    xref_predictor=(
-                        12 if i % 8 == 5 else (2 if i % 8 == 7 else None)
-                    ),
-                )
-            )
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        pages = [
+            [f"Doc {i} page {p}", f"body {(i * 7 + p) % 97} (pdf)"]
+            for p in range(1 + i % 3)
+        ]
+        return encode_pdf(
+            pages,
+            compress=(i % 2 == 0),
+            variant=i,
+            nest_kids=(i % 7 == 0),
+            split_contents=(i % 5 == 0),
+            incremental_title=(f"rev{i}" if i % 3 == 0 else None),
+            xref_stream=(i % 2 == 1),
+            objstm=(i % 8 in (1, 3)),
+            xref_predictor=(
+                12 if i % 8 == 5 else (2 if i % 8 == 7 else None)
+            ),
+        )
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)

@@ -14,12 +14,13 @@ Scope: AVI RIFF structure with ``00dc``/``00db`` video chunks
 (MJPEG); other codecs' chunks decode to null frames (attributable,
 never fatal); ``idx1``/header LISTs are walked over, not required.
 
-Scale shape: :func:`video_frames` is one Arrow ``mapInPandas`` stage
-over the payload scan — the archive bytes never shuffle, sampled
-frames fan out row-local (posexplode shape), and only the small
-per-frame metadata leaves the stage. ``every_n`` sampling happens
-INSIDE the decoder, so unsampled frames are never JPEG-decoded —
-at 100 TB the cost is the scan plus decode of the sampled subset.
+Scale shape: :func:`video_frames` is one
+:func:`._payload.map_payloads` stage over the payload scan — the
+archive bytes never shuffle, sampled frames fan out row-local, and
+only the small per-frame metadata leaves the stage. ``every_n``
+sampling happens INSIDE the decoder, so unsampled frames are never
+JPEG-decoded — at 100 TB the cost is the scan plus decode of the
+sampled subset.
 
 The fixture encoder (:func:`make_avi_payload`) writes real AVI
 headers (avih / strl / strh / strf) around DC-only fixture JPEGs, so
@@ -30,15 +31,11 @@ and the ``video_frames`` oracle states them outright.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
+from ._payload import Rows, build_payloads, map_payloads
 from .jpeg import encode_jpeg, parse_jpeg
 
 __all__ = ["parse_avi_frames", "video_frames", "make_avi_payload"]
@@ -93,6 +90,25 @@ VIDEO_FRAME_FIELDS = [
 ]
 
 
+def _avi_rows(payload: bytes, every_n: int) -> Rows:
+    """:data:`VIDEO_FRAME_FIELDS` rows of every ``every_n``-th frame of an
+    AVI payload; a frame that fails to decode keeps its index and total
+    with null stats."""
+    frames = parse_avi_frames(payload)
+    if frames is None:
+        return None
+    rows = []
+    for fi in range(0, len(frames), every_n):
+        img = parse_jpeg(frames[fi])
+        if img is None:
+            rows.append((fi, len(frames), None, None, None))
+        else:
+            px = img["pixels"]
+            mean = float(px.mean()) if px.size else None
+            rows.append((fi, len(frames), img["width"], img["height"], mean))
+    return rows
+
+
 def video_frames(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -107,45 +123,8 @@ def video_frames(
     (the archive stays attributable either way)."""
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *VIDEO_FRAME_FIELDS]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = []
-            rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                frames = parse_avi_frames(p)
-                if frames is None:
-                    ids.append(i)
-                    rows.append((None, None, None, None, None))
-                    continue
-                total = len(frames)
-                for fi in range(0, total, every_n):
-                    img = parse_jpeg(frames[fi])
-                    ids.append(i)
-                    if img is None:
-                        rows.append((fi, total, None, None, None))
-                    else:
-                        px = img["pixels"]
-                        rows.append(
-                            (
-                                fi,
-                                total,
-                                img["width"],
-                                img["height"],
-                                float(px.mean()) if px.size else None,
-                            )
-                        )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_FRAME_FIELDS]
-            )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
+    return map_payloads(
+        df, lambda p: _avi_rows(p, every_n), VIDEO_FRAME_FIELDS, id_col, payload_col
     )
 
 
@@ -199,23 +178,15 @@ def make_avi_payload(
     ``128 + ((id*11 + f*17 + b*23) % 160) - 80`` — the closed form
     the ``video_frames`` oracle states."""
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            n = 4 + i % 5
-            frames = []
-            for f in range(n):
-                blocks = [
-                    [((i * 11 + f * 17 + b * 23) % 160) - 80] + [0] * 63
-                    for b in range(2)
-                ]
-                frames.append(encode_jpeg(16, 8, [blocks]))
-            out.append(make_avi_bytes(frames, 16, 8))
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        n = 4 + i % 5
+        frames = []
+        for f in range(n):
+            blocks = [
+                [((i * 11 + f * 17 + b * 23) % 160) - 80] + [0] * 63
+                for b in range(2)
+            ]
+            frames.append(encode_jpeg(16, 8, [blocks]))
+        return make_avi_bytes(frames, 16, 8)
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)

@@ -3,7 +3,7 @@ layout for large-scale multimodal training data (shards are plain
 tar archives; the files ``key.jpg`` / ``key.txt`` / ``key.json``
 form one training sample per key, samples stored contiguously).
 
-Ingest stages (Arrow ``mapInPandas`` over the shard scan) plus — r8
+Ingest stages (:func:`._payload.map_payloads` over the shard scan) plus — r8
 — the WRITE side (:func:`write_webdataset` /
 :func:`save_webdataset`): a curation pipeline re-shards its output
 (select → re-pack into size-bounded tar shards with deterministic
@@ -52,14 +52,19 @@ sample grouping AND the decoded image statistics.
 from __future__ import annotations
 
 import io
+import itertools
+import struct
 import tarfile
-from collections.abc import Iterator
+import zipfile
+import zlib
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+
+from ._payload import Rows, build_payloads, map_payloads
 
 __all__ = [
     "tar_members",
@@ -75,21 +80,36 @@ __all__ = [
 ]
 
 
-def _iter_members(payload: bytes):
-    with tarfile.open(fileobj=io.BytesIO(bytes(payload))) as tf:
-        for m in tf:
-            if not m.isfile():
-                continue
-            name = m.name
-            # WebDataset convention: the sample key is everything up
-            # to the FIRST dot of the basename (so ``x.seg.png`` is
-            # sample ``x`` with ext ``seg.png``, and dotted directory
-            # prefixes like ``v1.2/x.png`` never split the key).
-            base = name.rfind("/") + 1
-            dot = name.find(".", base)
-            key, ext = (name, "") if dot < 0 else (name[:dot], name[dot + 1 :])
-            body = tf.extractfile(m).read()
-            yield key, ext, body
+def _split_name(name: str) -> tuple[str, str]:
+    # WebDataset convention: the sample key is everything up to the
+    # FIRST dot of the basename (so ``x.seg.png`` is sample ``x`` with
+    # ext ``seg.png``, and dotted directory prefixes like
+    # ``v1.2/x.png`` never split the key).
+    base = name.rfind("/") + 1
+    dot = name.find(".", base)
+    return (name, "") if dot < 0 else (name[:dot], name[dot + 1 :])
+
+
+def _tar_entries(payload: bytes) -> list[tuple[str, str, bytes]] | None:
+    """``(key, ext, body)`` of every regular tar member in archive
+    order, or ``None`` for an unreadable archive."""
+    try:
+        with tarfile.open(fileobj=io.BytesIO(bytes(payload))) as tf:
+            return [
+                (*_split_name(m.name), tf.extractfile(m).read())
+                for m in tf
+                if m.isfile()
+            ]
+    except (tarfile.TarError, OSError, EOFError):
+        return None
+
+
+def _member_rows(members: list[tuple[str, str, bytes]] | None) -> Rows:
+    rows = [
+        (j, key, ext, len(body), body)
+        for j, (key, ext, body) in enumerate(members or ())
+    ]
+    return rows or None
 
 
 TAR_MEMBER_FIELDS = [
@@ -108,35 +128,14 @@ def tar_members(
     member: ``(id_col, member_idx, sample_key, ext, n_bytes,
     member)`` — ``member_idx`` (r8) is the member's position in the
     archive, so shard ORDER is checkable downstream (the
-    ``webdataset_roundtrip`` oracle replays it). Unreadable shards
-    yield a single all-null member row."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *TAR_MEMBER_FIELDS]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rows = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    members = list(_iter_members(p)) if p is not None else None
-                except (tarfile.TarError, OSError, EOFError):
-                    members = None
-                if not members:
-                    ids.append(i)
-                    rows.append((None, None, None, None, None))
-                    continue
-                for j, (key, ext, body) in enumerate(members):
-                    ids.append(i)
-                    rows.append((j, key, ext, len(body), body))
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in TAR_MEMBER_FIELDS]
-            )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
+    ``webdataset_roundtrip`` oracle replays it). Unreadable or empty
+    shards yield a single all-null member row."""
+    return map_payloads(
+        df,
+        lambda p: _member_rows(_tar_entries(p)),
+        TAR_MEMBER_FIELDS,
+        id_col,
+        payload_col,
     )
 
 
@@ -149,48 +148,22 @@ SAMPLE_FIELDS = [
 ]
 
 
+def _tar_sample_rows(payload: bytes) -> Rows:
+    rows = []
+    # adjacent members with one key form one sample
+    for key, group in itertools.groupby(_tar_entries(payload) or (), lambda m: m[0]):
+        parts = {ext: body for _, ext, body in group}
+        rows.append((key, len(parts), parts))
+    return rows or None
+
+
 def webdataset_samples(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """One row per training sample: members grouped by key INSIDE the
     Arrow stage (WebDataset stores a sample's files adjacently, so no
     shuffle is needed) with an ``ext -> payload`` map column."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *SAMPLE_FIELDS]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rows = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    members = list(_iter_members(p)) if p is not None else None
-                except (tarfile.TarError, OSError, EOFError):
-                    members = None
-                if not members:
-                    ids.append(i)
-                    rows.append((None, None, None))
-                    continue
-                cur_key, parts = None, {}
-                for key, ext, body in members:
-                    if cur_key is not None and key != cur_key:
-                        ids.append(i)
-                        rows.append((cur_key, len(parts), dict(parts)))
-                        parts = {}
-                    cur_key = key
-                    parts[ext] = body
-                if cur_key is not None:
-                    ids.append(i)
-                    rows.append((cur_key, len(parts), dict(parts)))
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in SAMPLE_FIELDS]
-            )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return map_payloads(df, _tar_sample_rows, SAMPLE_FIELDS, id_col, payload_col)
 
 
 def write_webdataset(
@@ -308,34 +281,66 @@ def make_webdataset_payload(
     WebDataset contract."""
     from .jpeg import encode_jpeg
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            buf = io.BytesIO()
-            with tarfile.open(fileobj=buf, mode="w") as tf:
-                for k in range(2 + i % 3):
-                    txt = f"caption {i} {k}".encode()
-                    dc = ((i * 5 + k * 9) % 160) - 80
-                    jpg = encode_jpeg(8, 8, [[[dc] + [0] * 63]])
-                    for ext, body in (("txt", txt), ("jpg", jpg)):
-                        info = tarfile.TarInfo(name=f"s{i}_{k}.{ext}")
-                        info.size = len(body)
-                        info.mtime = 0
-                        tf.addfile(info, io.BytesIO(body))
-            out.append(buf.getvalue())
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        buf = io.BytesIO()
+        with tarfile.open(fileobj=buf, mode="w") as tf:
+            for k in range(2 + i % 3):
+                txt = f"caption {i} {k}".encode()
+                dc = ((i * 5 + k * 9) % 160) - 80
+                jpg = encode_jpeg(8, 8, [[[dc] + [0] * 63]])
+                for ext, body in (("txt", txt), ("jpg", jpg)):
+                    info = tarfile.TarInfo(name=f"s{i}_{k}.{ext}")
+                    info.size = len(body)
+                    info.mtime = 0
+                    tf.addfile(info, io.BytesIO(body))
+        return buf.getvalue()
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
 # ZIP shards (r10) — the other archive container real datasets ship in
 # ---------------------------------------------------------------------------
+_ZIP_ERRORS = (
+    zipfile.BadZipFile,
+    ValueError,
+    OSError,
+    EOFError,
+    NotImplementedError,  # unsupported compression
+    RuntimeError,  # encrypted member
+    zlib.error,  # corrupt DEFLATE stream mid-read
+    struct.error,  # truncated fixed-size record
+)
+
+
+def _has_ext(name: str) -> bool:
+    return "." in name.rsplit("/", 1)[-1]
+
+
+def _zip_entries(
+    payload: bytes, cap: int, keep: Callable[[str], bool]
+) -> list[tuple[str, bytes]] | None:
+    """``(filename, body)`` of every file entry whose name passes
+    ``keep``, in central-directory order; ``None`` for an unreadable or
+    encrypted archive, or when the kept entries' declared sizes pass
+    ``cap`` one by one or in sum (``zipfile`` enforces ``file_size`` as
+    the inflate output bound, so nothing past the cap is inflated)."""
+    out = []
+    total = 0
+    try:
+        with zipfile.ZipFile(io.BytesIO(bytes(payload))) as zf:
+            for info in zf.infolist():
+                if info.is_dir() or not keep(info.filename):
+                    continue
+                total += info.file_size
+                if info.file_size > cap or total > cap:
+                    return None
+                out.append((info.filename, zf.read(info)))
+    except _ZIP_ERRORS:
+        return None
+    return out
+
+
 def zip_samples(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -355,68 +360,16 @@ def zip_samples(
     or an archive whose members cumulatively exceed it, yields the
     attributable null row instead of expanding unbounded into
     executor memory (the 42.zip shape)."""
-    import struct
-    import zipfile
-    import zlib
+    from .warc import MAX_DECODED_BYTES as cap
 
-    from .warc import MAX_DECODED_BYTES
+    def rows(payload: bytes) -> Rows:
+        samples: dict[str, dict] = {}
+        for name, body in _zip_entries(payload, cap, _has_ext) or ():
+            key, ext = name.rsplit("/", 1)[-1].rsplit(".", 1)
+            samples.setdefault(key, {})[ext] = body
+        return [(k, len(v), v) for k, v in sorted(samples.items())] or None
 
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *SAMPLE_FIELDS]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rows = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                samples: dict[str, dict] = {}
-                try:
-                    if p is None:
-                        raise ValueError("null payload")
-                    with zipfile.ZipFile(io.BytesIO(bytes(p))) as zf:
-                        total = 0
-                        for info in zf.infolist():
-                            if info.is_dir():
-                                continue
-                            name = info.filename.rsplit("/", 1)[-1]
-                            if "." not in name:
-                                continue
-                            total += info.file_size
-                            if (
-                                info.file_size > MAX_DECODED_BYTES
-                                or total > MAX_DECODED_BYTES
-                            ):
-                                raise ValueError("zip decompression bomb")
-                            key, ext = name.rsplit(".", 1)
-                            samples.setdefault(key, {})[ext] = zf.read(
-                                info
-                            )
-                except (
-                    zipfile.BadZipFile,
-                    ValueError,
-                    OSError,
-                    EOFError,
-                    NotImplementedError,  # unsupported compression
-                    RuntimeError,  # encrypted member
-                    zlib.error,  # corrupt DEFLATE stream mid-read
-                    struct.error,  # truncated fixed-size record
-                ):
-                    samples = {}
-                if not samples:
-                    ids.append(i)
-                    rows.append((None, None, None))
-                    continue
-                for key in sorted(samples):
-                    parts = samples[key]
-                    ids.append(i)
-                    rows.append((key, len(parts), dict(parts)))
-            out = pd.DataFrame(rows, columns=[f.name for f in SAMPLE_FIELDS])
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return map_payloads(df, rows, SAMPLE_FIELDS, id_col, payload_col)
 
 
 def make_zip_payload(
@@ -429,38 +382,29 @@ def make_zip_payload(
     with DEFLATE, even ids STORE, so both decompression arms of the
     reader genuinely run; timestamps pin to the DOS epoch for
     byte-stable output."""
-    import zipfile
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            comp = zipfile.ZIP_DEFLATED if i % 2 else zipfile.ZIP_STORED
-            buf = io.BytesIO()
-            with zipfile.ZipFile(buf, "w", compression=comp) as zf:
-                for k in range(2 + i % 3):
-                    for ext, body in (
-                        ("txt", f"caption {i} {k}"),
-                        (
-                            "json",
-                            '{"id":%d,"k":%d,"n":%d}'
-                            % (i, k, 10 + (i + k) % 50),
-                        ),
-                    ):
-                        info = zipfile.ZipInfo(
-                            f"z{i}_{k}.{ext}",
-                            date_time=(1980, 1, 1, 0, 0, 0),
-                        )
-                        info.compress_type = comp
-                        zf.writestr(info, body)
-            out.append(buf.getvalue())
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        comp = zipfile.ZIP_DEFLATED if i % 2 else zipfile.ZIP_STORED
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w", compression=comp) as zf:
+            for k in range(2 + i % 3):
+                for ext, body in (
+                    ("txt", f"caption {i} {k}"),
+                    (
+                        "json",
+                        '{"id":%d,"k":%d,"n":%d}'
+                        % (i, k, 10 + (i + k) % 50),
+                    ),
+                ):
+                    info = zipfile.ZipInfo(
+                        f"z{i}_{k}.{ext}",
+                        date_time=(1980, 1, 1, 0, 0, 0),
+                    )
+                    info.compress_type = comp
+                    zf.writestr(info, body)
+        return buf.getvalue()
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, build, id_col, payload_col)
 
 
 def zip_members(
@@ -475,71 +419,15 @@ def zip_members(
     share every downstream stage. Member bodies honor the same
     decompression-bomb cap as :func:`zip_samples`; unreadable or
     over-cap shards yield a single all-null member row."""
-    import struct
-    import zipfile
-    import zlib
+    from .warc import MAX_DECODED_BYTES as cap
 
-    from .warc import MAX_DECODED_BYTES
+    def rows(payload: bytes) -> Rows:
+        entries = _zip_entries(payload, cap, lambda name: True)
+        if entries is None:
+            return None
+        return _member_rows([(*_split_name(n), body) for n, body in entries])
 
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *TAR_MEMBER_FIELDS]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rows = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                members = []
-                try:
-                    if p is None:
-                        raise ValueError("null payload")
-                    with zipfile.ZipFile(io.BytesIO(bytes(p))) as zf:
-                        total = 0
-                        for info in zf.infolist():
-                            if info.is_dir():
-                                continue
-                            total += info.file_size
-                            if (
-                                info.file_size > MAX_DECODED_BYTES
-                                or total > MAX_DECODED_BYTES
-                            ):
-                                raise ValueError("zip decompression bomb")
-                            name = info.filename
-                            base = name.rfind("/") + 1
-                            dot = name.find(".", base)
-                            key, ext = (
-                                (name, "")
-                                if dot < 0
-                                else (name[:dot], name[dot + 1 :])
-                            )
-                            members.append((key, ext, zf.read(info)))
-                except (
-                    zipfile.BadZipFile,
-                    ValueError,
-                    OSError,
-                    EOFError,
-                    NotImplementedError,
-                    RuntimeError,
-                    zlib.error,  # corrupt DEFLATE stream mid-read
-                    struct.error,  # truncated fixed-size record
-                ):
-                    members = []
-                if not members:
-                    ids.append(i)
-                    rows.append((None, None, None, None, None))
-                    continue
-                for j, (key, ext, body) in enumerate(members):
-                    ids.append(i)
-                    rows.append((j, key, ext, len(body), body))
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in TAR_MEMBER_FIELDS]
-            )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return map_payloads(df, rows, TAR_MEMBER_FIELDS, id_col, payload_col)
 
 
 def write_zip_shards(
@@ -577,8 +465,6 @@ def write_zip_shards(
     corpus size. Shards past 4 GB or 65535 members get ZIP64
     records automatically (stdlib ``allowZip64`` default), which
     ``zip_samples`` / ``zip_members`` read back transparently."""
-    import zipfile
-
     from .quality import training_order
 
     comp = zipfile.ZIP_DEFLATED if compress else zipfile.ZIP_STORED

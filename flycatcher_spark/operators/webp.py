@@ -52,6 +52,8 @@ import struct
 
 import numpy as np
 
+from . import warc as _warc
+
 __all__ = [
     "parse_webp",
     "encode_webp",
@@ -71,10 +73,6 @@ _DIST_ALPHABET = 40
 _MAX_CODE_LEN = 15
 _MAX_CL_LEN = 7  # code-length-code lengths are 3-bit fields
 
-#: raster decompression-bomb cap (r11): zero-bit constant codes decode
-#: pixels for free, so raster size must be bounded by policy, not by
-#: input size — 64 MiB of RGBA, the same figure as warc.MAX_DECODED_BYTES
-MAX_RASTER_BYTES = 64 * 1024 * 1024
 #: above this many stream bits the lookahead-window list (~36 B/bit of
 #: transient Python ints) is skipped and decode falls back to the
 #: per-bit dict walk — ~2 MB of stream, far beyond any sane
@@ -607,8 +605,9 @@ def _decode_vp8l_body(data: bytes) -> tuple[int, int, int, np.ndarray]:
     # raster bomb guard (r11): zero-bit constant codes decode a pixel
     # for FREE, so a ~22-byte crafted header claiming 16384x16384
     # would otherwise allocate a 1 GB raster out of nothing — the
-    # VP8L analogue of the WARC gzip bomb, capped the same way
-    if width * height * 4 > MAX_RASTER_BYTES:
+    # VP8L analogue of the WARC gzip bomb, capped by the same
+    # warc.MAX_DECODED_BYTES
+    if width * height * 4 > _warc.MAX_DECODED_BYTES:
         raise ValueError("VP8L raster exceeds the decode cap")
     alpha_hint = br.read_bit()
     if br.read(3) != 0:
@@ -1113,7 +1112,7 @@ def parse_webp_frames(payload: bytes, every_n: int = 1) -> dict | None:
         # canvas bomb guard (r11): VP8X dims are 24-bit, so a crafted
         # header could demand a 16M x 16M canvas — cap like the still
         # raster (attributable None, never an executor OOM)
-        if cw * chh * 4 > MAX_RASTER_BYTES:
+        if cw * chh * 4 > _warc.MAX_DECODED_BYTES:
             return None
         if anim is None or len(anim) < 6:
             return None

@@ -200,7 +200,7 @@ class TestAllocationBombs:
         assert M.parse_audio(bytes(base)) is None
         # and the guard itself (not frame exhaustion) is what fires:
         # with a tiny cap even the VALID file is rejected...
-        monkeypatch.setattr(flac, "MAX_PCM_BYTES", 64)
+        monkeypatch.setattr("flycatcher_spark.operators.warc.MAX_DECODED_BYTES", 64)
         assert M.parse_audio(flac.encode_flac([0] * 64)) is None
 
     def test_valid_payloads_still_decode_after_guards(self):

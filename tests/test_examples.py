@@ -1,15 +1,17 @@
 """Examples must stay runnable — they are the documented entry points
 and rot silently otherwise. Each runs in a subprocess (own
 SparkSession, so ``spark.stop()`` inside an example can't kill the
-suite's shared session); the four exercised ones launch CONCURRENTLY
-and are asserted individually — each pays a ~20 s JVM+Spark startup,
-so running them back to back was ~80 s of suite wall for the same
-four exit codes (r12)."""
+suite's shared session) and is asserted individually. Each pays a
+~20 s JVM+Spark startup, so they run two at a time. A child's stdout
+and stderr go to temp files, not pipes: a child that fills a pipe
+nobody is reading yet would block until its timeout."""
 
 from __future__ import annotations
 
 import subprocess
 import sys
+import tempfile
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import pytest
@@ -24,28 +26,27 @@ _CHECKED = [
 ]
 
 
+def _run_example(name: str) -> tuple[int, str, str]:
+    with tempfile.TemporaryFile("w+") as out, tempfile.TemporaryFile("w+") as err:
+        try:
+            rc = subprocess.run(
+                [sys.executable, str(EXAMPLES / name)],
+                stdout=out,
+                stderr=err,
+                timeout=300,
+            ).returncode
+            note = ""
+        except subprocess.TimeoutExpired:
+            rc, note = -1, "\nTIMEOUT"
+        out.seek(0)
+        err.seek(0)
+        return rc, out.read(), err.read() + note
+
+
 @pytest.fixture(scope="module")
 def example_results():
-    procs = {
-        name: subprocess.Popen(
-            [sys.executable, str(EXAMPLES / name)],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
-        )
-        for name in _CHECKED
-    }
-    results = {}
-    for name, proc in procs.items():
-        try:
-            stdout, stderr = proc.communicate(timeout=300)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-            stdout, stderr = proc.communicate()
-            results[name] = (-1, stdout, stderr + "\nTIMEOUT")
-            continue
-        results[name] = (proc.returncode, stdout, stderr)
-    return results
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        return dict(zip(_CHECKED, pool.map(_run_example, _CHECKED)))
 
 
 @pytest.mark.parametrize("name", _CHECKED)
